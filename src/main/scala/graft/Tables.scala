@@ -96,9 +96,9 @@ object Tables {
     // stats that cost microseconds each). Raising the threshold keeps
     // listing driver-side up to 512 paths; beyond that the distributed
     // listing is genuinely right (object-store latency × thousands of
-    // files). The production-shape scan (DSv2 GraftScan) never lists at
-    // all — its file set and sizes come from the manifest — so this
-    // only governs the utility read paths.
+    // files). The DSv2 scan never lists: it plans over a GraftFileIndex
+    // built from the manifest's (path, length) pairs, so this only
+    // governs the Scala-API read paths.
     "spark.sql.sources.parallelPartitionDiscovery.threshold" -> "512")
 
   /** The events table's `ts` physical encoding is the data generator's

@@ -1087,10 +1087,10 @@ object Similarity {
       (if (byName.contains("codes") && byName.contains("codebook")) Seq("pq") else Nil) ++
       (if (byName.contains("codes_i8") && byName.contains("i8meta")) Seq("int8") else Nil) ++
       (if (byName.contains("codes_bin")) Seq("bin") else Nil)
-    // explainMeta runs tableSize() — one file-status call per data/DV
-    // file, the expensive part of this verb — so compute it ONCE per
-    // sibling and serve the header's postings file count from the same
-    // map (review r13: the double call doubled the dominant cost)
+    // explainMeta runs tableSize() — a status call per DV sidecar plus
+    // the pointer file (data lengths come from the manifest) — so
+    // compute it ONCE per sibling and serve the header's postings file
+    // count from the same map
     val metas = present.map { case (name, t) => (name, t.explainMeta, t) }
     val postFiles = metas.collectFirst {
       case ("postings", m, _) => m("GraftFiles").toLong

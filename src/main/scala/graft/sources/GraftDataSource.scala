@@ -9,7 +9,7 @@ import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Tabl
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.ScanBuilder
 import org.apache.spark.sql.connector.write.{LogicalWriteInfo, SupportsTruncate, V1Write, WriteBuilder}
-import org.apache.spark.sql.graft.ParquetDelegate
+import org.apache.spark.sql.graft.{GraftFileIndex, ParquetDelegate}
 import org.apache.spark.sql.sources.{DataSourceRegister, InsertableRelation}
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -29,8 +29,9 @@ import graft.storage.{GraftTable, GraftTableOptions}
   *   df.write.format("graft").mode("append").save(path)
   * }}}
   *
-  * Reads delegate to Spark's ParquetTable over the committed file list
-  * (column pruning + filter pushdown + row-group skipping intact — the
+  * Reads delegate to Spark's parquet scan over the committed files,
+  * indexed from the manifest with no listing ([[org.apache.spark.sql.graft
+  * .GraftFileIndex]]; column pruning + filter pushdown + row-group skipping intact — the
   * reference's N1-N3 scan stack). Writes go through [[GraftTable.append]]
   * so every insert commits via the atomic metadata rename and respects
   * table options (compression, stripe/block sizing).
@@ -275,9 +276,9 @@ class GraftSparkTable(location: String) extends Table
     // ANALYZE column stats (when present) feed filtered-scan estimates,
     // so selective predicates shrink the planner's view of this side —
     // the reference ANALYZE's selectivity role (cstore_fdw.c:1628-1638).
-    ParquetDelegate.scanBuilder(name(), t.committedFiles, t.readSchema(), options,
+    ParquetDelegate.scanBuilder(GraftFileIndex.of(t), t.readSchema(), options,
       exactRowCount = Some(t.rowCountFromMetadata()),
-      filePruner = Some(t.prunedFiles),
+      filePruner = Some(t.prunedFileLens),
       tableStats = t.stats(),
       explainMeta = () => t.explainMeta,
       streamLocation = Some(location),
@@ -336,9 +337,9 @@ class GraftSnapshotTable(location: String, version: Long) extends Table
     // column for its pre-ALTER files at read time, so footer aggregates
     // are just as unsound here as on the live table — refuse pushdown on
     // the time-travel path too.
-    ParquetDelegate.scanBuilder(name(), t.committedFiles, t.readSchema(), options,
+    ParquetDelegate.scanBuilder(GraftFileIndex.of(t), t.readSchema(), options,
       exactRowCount = Some(t.rowCountFromMetadata()),
-      filePruner = Some(t.prunedFiles),
+      filePruner = Some(t.prunedFileLens),
       tableStats = None,
       explainMeta = () => t.explainMeta,
       hasSynthesizedColumns = t.hasSynthesizedColumns,

@@ -958,17 +958,15 @@ private[sources] object GraftProcedures {
           } else if (procName == "files") {
             // per-file introspection: the maintenance operator's view of
             // layout health (small-file tail, dead-row load per file)
-            val (hfs, _) = graft.storage.GraftTable.fsAndPath(dir)
             val dvs = t.dvEntries
             val schema = StructType(Seq(
               StructField("file", StringType, nullable = false),
               StructField("bytes", LongType, nullable = false),
               StructField("rows", LongType, nullable = false),
               StructField("dead_rows", LongType, nullable = false)))
-            val fileRows = t.relFiles.map { rel =>
-              val st = hfs.getFileStatus(new org.apache.hadoop.fs.Path(s"$dir/$rel"))
+            val fileRows = t.relFiles.zip(t.committedFileLens).map { case (rel, (_, len)) =>
               new GenericInternalRow(Array[Any](
-                UTF8String.fromString(rel), st.getLen,
+                UTF8String.fromString(rel), len,
                 t.fileRowCount(rel),
                 dvs.get(rel).map(_.card).getOrElse(0L))): InternalRow
             }.toArray
@@ -1004,12 +1002,9 @@ private[sources] object GraftProcedures {
             // quality gates, and the evolution state (tombstones +
             // pending columns) that explains why pushdown or a re-ADD
             // is currently refused
-            val (hfs, _) = graft.storage.GraftTable.fsAndPath(dir)
             val opts = t.options
             def csv(xs: Seq[String]) = if (xs.isEmpty) "-" else xs.mkString(",")
-            val sizeBytes = t.relFiles.map { rel =>
-              hfs.getFileStatus(new org.apache.hadoop.fs.Path(s"$dir/$rel")).getLen
-            }.sum
+            val sizeBytes = t.committedFileLens.map(_._2).sum
             val schema = StructType(Seq(
               StructField("metric", StringType, nullable = false),
               StructField("value", StringType, nullable = false)))

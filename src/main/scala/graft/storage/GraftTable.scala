@@ -416,6 +416,7 @@ final class GraftTable private (
         rowCount = m.rowCount,
         defaults = m.defaults,
         fileStats = m.fileStats,
+        fileLens = m.fileLens,
         dvs = m.dvs,
         droppedCols = m.droppedCols,
         changeCommit = resurrects)
@@ -474,13 +475,15 @@ final class GraftTable private (
   def clusteredBy: Seq[String] = meta.options.sortBy
 
   /** On-disk bytes of committed data + metadata, the
-    * `cstore_table_size(regclass)` UDF (`cstore_fdw.c:1183-1229`). */
+    * `cstore_table_size(regclass)` UDF (`cstore_fdw.c:1183-1229`). Data
+    * file bytes come from the manifest's recorded lengths; only the
+    * deletion-vector sidecars and the pointer file are stat'ed. */
   def tableSize(): Long = {
     val (fs, _) = fsAndPath(location)
-    val dataBytes = (dataFiles() ++ meta.dvs.values.map(e => s"$location/${e.path}"))
-      .map(f => fs.getFileStatus(new HPath(f)).getLen).sum
+    val dvBytes = meta.dvs.values
+      .map(e => fs.getFileStatus(new HPath(s"$location/${e.path}")).getLen).sum
     val metaBytes = fs.getFileStatus(metaPath(location)).getLen
-    dataBytes + metaBytes
+    committedFileLens.map(_._2).sum + dvBytes + metaBytes
   }
 
   // ---- write path ----------------------------------------------------
@@ -884,7 +887,8 @@ final class GraftTable private (
     * that do have stats would record `nulls = 0` (or too-tight min/max)
     * for a file that still holds nulls / out-of-range values, and
     * `refutes()` would silently prune matching rows. */
-  private def footerInfo(file: String): (Long, Map[String, GraftTable.ColFileStats]) = {
+  private def footerInfo(file: String)
+      : (Long, Map[String, GraftTable.ColFileStats], Long) = {
     val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
       new org.apache.hadoop.fs.Path(file), spark.sessionState.newHadoopConf())
     val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
@@ -952,7 +956,7 @@ final class GraftTable private (
       // footerInfo is the pure footer-metadata reader — every commit
       // path harvests witnesses through [[footerInfosRel]]'s single
       // grouped job instead.)
-      (rows, (byCol -- unusable).toMap)
+      (rows, (byCol -- unusable).toMap, in.getLength)
     } finally r.close()
   }
 
@@ -998,13 +1002,30 @@ final class GraftTable private (
   private var pendingWitnesses
       : Map[String, IndexedSeq[Option[(String, String)]]] = Map.empty
 
-  /** Batched stat harvest for a commit's new files: per-file footer
-    * reads (metadata only) plus the collation witnesses — taken from
-    * the WRITE JOB's own harvest ([[pendingWitnesses]]) when the batch
-    * came through the tracked writer, with the single-job re-read
-    * ([[collWitnessRows]]) as the fallback for any file the tracker
-    * did not cover. Returns `(relativePath, info)` in the input
-    * order — the shape every commit path's `infos` wants. */
+  /** Byte lengths harvested by [[footerInfosRel]] since the last
+    * commit, keyed by rel path; [[commitMutation]] records the ones its
+    * commit references in `Meta.fileLens` and clears the map. Same
+    * single-writer handoff as [[pendingWitnesses]]; entries of a write
+    * that never commits are dropped (batch paths are unique). */
+  private var footerLens: Map[String, Long] = Map.empty
+
+  /** Batched stat harvest for a commit's new files — THE chokepoint
+    * every commit path (append/COPY/INSERT, COW rewrites, MERGE,
+    * compaction, the delta commit) passes its written files through:
+    * per-file footer reads (metadata only) plus the collation
+    * witnesses — taken from the WRITE JOB's own harvest
+    * ([[pendingWitnesses]]) when the batch came through the tracked
+    * writer, with the single-job re-read ([[collWitnessRows]]) as the
+    * fallback for any file the tracker did not cover.
+    *
+    * A file holding no rows is deleted here (with its `.crc` sidecar)
+    * and left out of the result, so no commit ever references one:
+    * Spark's writer emits a schema-only file from task 0 whenever that
+    * task's split is empty, and a committed 0-row file carries no zone
+    * map, so every filtered scan would keep it. Returns
+    * `(relativePath, info)` for the files with rows, in input order —
+    * the shape every commit path's `infos` wants; their byte lengths
+    * go to [[footerLens]]. */
   private def footerInfosRel(files: Seq[String])
       : Seq[(String, (Long, Map[String, GraftTable.ColFileStats]))] = {
     val collFields = collatedFields
@@ -1015,9 +1036,19 @@ final class GraftTable private (
           org.apache.spark.sql.graft.WitnessWrite.fileKey(f)).map(f -> _))
         .toMap
     pendingWitnesses = Map.empty
-    val witnesses = collWitnessRows(files.filterNot(tracked.contains))
-    files.map { f =>
-      val (rows, base) = footerInfo(f)
+    val (withRows, empty) = files.map(f => f -> footerInfo(f)).partition(_._2._1 > 0L)
+    if (empty.nonEmpty) {
+      val (fs, _) = fsAndPath(location)
+      empty.foreach { case (f, _) =>
+        val p = new HPath(f)
+        fs.delete(p, false)
+        fs.delete(new HPath(p.getParent, s".${p.getName}.crc"), false)
+      }
+    }
+    val witnesses = collWitnessRows(withRows.map(_._1).filterNot(tracked.contains))
+    withRows.map { case (f, (rows, base, len)) =>
+      val rel = relativize(f, location)
+      footerLens += rel -> len
       val merged = tracked.get(f) match {
         case Some(opts) =>
           base ++ collFields.toSeq.zip(opts).flatMap { case (cf, o) =>
@@ -1040,7 +1071,7 @@ final class GraftTable private (
           case None => base
         }
       }
-      relativize(f, location) -> ((rows, merged))
+      rel -> ((rows, merged))
     }
   }
 
@@ -1050,16 +1081,23 @@ final class GraftTable private (
     * only when its zone map REFUTES a pushed filter. Files without
     * recorded stats (pre-feature appends, unsupported types) are always
     * kept. */
-  def prunedFiles(filters: Seq[org.apache.spark.sql.sources.Filter]): Seq[String] = {
-    if (filters.isEmpty) return dataFiles()
-    meta.files.filterNot { rel =>
+  def prunedFiles(filters: Seq[Filter]): Seq[String] =
+    prunedRels(filters).map(f => s"$location/$f")
+
+  /** [[prunedFiles]] with each kept file's byte length — the scan's
+    * planning input, read from the manifest alone. */
+  def prunedFileLens(filters: Seq[Filter]): Seq[(String, Long)] =
+    fileLensOf(prunedRels(filters))
+
+  private def prunedRels(filters: Seq[Filter]): Seq[String] =
+    if (filters.isEmpty) meta.files
+    else meta.files.filterNot { rel =>
       bucketRefutes(rel, filters) ||
       (meta.fileStats.get(rel) match {
         case Some(st) => filters.exists(f => GraftTable.refutes(meta.currentSchema, st, f))
         case None => false
       })
-    }.map(f => s"$location/$f")
-  }
+    }
 
   /** Zone-map-pruned read NET OF DELETION VECTORS: the file subset
     * surviving `filters` (file-level refutation only — residual row
@@ -1617,6 +1655,7 @@ final class GraftTable private (
       defaults = src.defaults,
       nextBatchId = src.nextBatchId,
       fileStats = src.fileStats,
+      fileLens = src.fileLens,
       dvs = src.dvs,
       droppedCols = src.droppedCols))
     // ANALYZE stats sidecar travels too: the clone plans like the source
@@ -1869,7 +1908,6 @@ final class GraftTable private (
         throw e
       }
     val infos = footerInfosRel(newFiles)
-      .filter(_._2._1 > 0L) // an all-deleted rewrite leaves no file behind
     val candSet = replaced.toSet
     // the rewrite read the replaced files under THESE deletion vectors;
     // a concurrent MOR delete on any of them would make the staged files
@@ -1992,7 +2030,6 @@ final class GraftTable private (
           val keptDf = readFilesDf(denseRels).filter(!coalesce(cond, lit(false)))
           val batchDir = writeBatchDir(keptDf)
           footerInfosRel(listParquetFiles(batchDir))
-            .filter(_._2._1 > 0L)
         }
       val denseSet = denseRels.toSet
       commitMutation { base =>
@@ -2113,14 +2150,14 @@ final class GraftTable private (
       val batchDir = writeBatchDir(rewritten)
       val newVersionFiles = listParquetFiles(batchDir)
       val newInfos = footerInfosRel(newVersionFiles)
-        .filter(_._2._1 > 0L)
       val updated = newInfos.map(_._2._1).sum
       if (updated == 0L) {
         val (fs, _) = GraftTable.fsAndPath(location)
         try fs.delete(new HPath(batchDir), true) catch { case _: Exception => () }
         return 0L
       }
-      try enforceChecks(newVersionFiles, schemaAtWrite, "MOR UPDATE")
+      try enforceChecks(newInfos.map(i => s"$location/${i._1}"), schemaAtWrite,
+        "MOR UPDATE")
       catch { case e: Throwable =>
         val (fs, _) = GraftTable.fsAndPath(location)
         try fs.delete(new HPath(batchDir), true) catch { case _: Exception => () }
@@ -2250,13 +2287,20 @@ final class GraftTable private (
     require(source.columns.contains(opCol),
       s"CDC source has no op column '$opCol'")
     require(!keyCols.contains(opCol), "the op column cannot be a key column")
-    // null-safe: a NULL op is an upsert, never a delete
+    // null-safe: a NULL op is an upsert, never a delete. A NULL-key
+    // delete row matches nothing (SQL equality): it drops out here,
+    // before mergeInternal, which requires non-null delete keys
     val dels = source.filter(col(opCol) <=> lit(deleteOp)).drop(opCol)
+      .na.drop(keyCols)
     val ups = source.filter(!(col(opCol) <=> lit(deleteOp))).drop(opCol)
     mergeInternal(ups, keyCols, txn, Some(dels))
   }
 
-  private def mergeInternal(source: DataFrame, keyCols: Seq[String],
+  /** `delSource` rows must carry non-null keys (the pre-candidate pass
+    * refuses any other): the folded `deleted` tally groups by key, and a
+    * null-key delete row would count the null-key target rows it groups
+    * with, which SQL equality never matches. */
+  private[storage] def mergeInternal(source: DataFrame, keyCols: Seq[String],
       txn: Option[(String, Long)],
       delSource: Option[DataFrame]): (Long, Long, Long) = withTableLock {
     refreshMeta()
@@ -2272,9 +2316,8 @@ final class GraftTable private (
     // rewrite join, the anti-join, and both counts — one materialization
     val s0 = alignToSchema(source)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // delete keys: NULL-key delete rows match nothing (SQL equality) and
-    // drop out; duplicate delete rows collapse — only the key matters
-    val d0 = delSource.map(_.select(keyCols.map(col): _*).na.drop(keyCols)
+    // delete keys: duplicate delete rows collapse — only the key matters
+    val d0 = delSource.map(_.select(keyCols.map(col): _*)
       .distinct()
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     try {
@@ -2296,18 +2339,13 @@ final class GraftTable private (
       val perKey = keyedAll.withColumn("__nk", nkCol)
         .groupBy((keyCols.map(col) :+ col("__nk")): _*)
         .agg(sum(col("__s")).as("__ns"), sum(col("__d")).as("__nd"))
-      val preRow = perKey.agg(
-        (Seq(max(col("__ns")).as("__maxns"),
+      val preAggs = Seq(max(col("__ns")).as("__maxns"),
+          sum(when(col("__nd") > 0 && col("__nk"), 1L)).as("__nulldel"),
           sum(when(col("__ns") > 0 && col("__nd") > 0, 1L)).as("__overlap")) ++
-          keyCols.flatMap(k => Seq(
-            min(when(!col("__nk"), col(k))).as(s"__mn_$k"),
-            max(when(!col("__nk"), col(k))).as(s"__mx_$k")))).head,
-        (Seq(max(col("__ns")).as("__maxns"),
-          sum(when(col("__ns") > 0 && col("__nd") > 0, 1L)).as("__overlap")) ++
-          keyCols.flatMap(k => Seq(
-            min(when(!col("__nk"), col(k))).as(s"__mn_$k"),
-            max(when(!col("__nk"), col(k))).as(s"__mx_$k")))).tail: _*)
-        .collect().head
+        keyCols.flatMap(k => Seq(
+          min(when(!col("__nk"), col(k))).as(s"__mn_$k"),
+          max(when(!col("__nk"), col(k))).as(s"__mx_$k")))
+      val preRow = perKey.agg(preAggs.head, preAggs.tail: _*).collect().head
       if (Option(preRow.getAs[Any]("__maxns")).exists(
           _.asInstanceOf[Long] > 1L)) {
         // rare failure path: re-derive the first duplicate key only to
@@ -2318,6 +2356,9 @@ final class GraftTable private (
           s"MERGE source has duplicate keys (first: ${dup.headOption.orNull}) — " +
             "each target row may match at most one source row")
       }
+      require(Option(preRow.getAs[Any]("__nulldel"))
+          .forall(_.asInstanceOf[Long] == 0L),
+        s"MERGE delete rows must carry non-null keys (${keyCols.mkString(", ")})")
       require(Option(preRow.getAs[Any]("__overlap"))
           .forall(_.asInstanceOf[Long] == 0L),
         "CDC batch has a key both upserted and deleted — collapse the " +
@@ -2362,8 +2403,9 @@ final class GraftTable private (
         // (optimization round 18): per (key, any-null-key) group, tally
         // target/source/delete multiplicities, then fold. SQL-equality
         // semantics are preserved exactly — null-key target rows match
-        // nothing (!__nk guards updated; delete keys are non-null by
-        // construction), null-key source rows always insert.
+        // nothing (!__nk guards updated; delete keys are non-null, as
+        // the pre-candidate pass requires), null-key source rows always
+        // insert.
         val nk2 = keyCols.map(col(_).isNull).reduce(_ || _)
         val tFlags = t.select((keyCols.map(col) :+ lit(1L).as("__t") :+
           lit(0L).as("__s") :+ lit(0L).as("__d")): _*)
@@ -2403,13 +2445,11 @@ final class GraftTable private (
           // stream-visible emission (Meta.emitFiles).
           def dirInfos(dir: String): Seq[(String, (Long, Map[String, GraftTable.ColFileStats]))] =
             footerInfosRel(listParquetFiles(dir))
-              .filter(_._2._1 > 0L)
           val rewriteDir = writeBatchDir(rewritten)
           val rewriteInfos = dirInfos(rewriteDir)
           val insertDir = if (inserted > 0L) Some(writeBatchDir(inserts)) else None
           val insertInfos = insertDir.map(dirInfos).getOrElse(Seq.empty)
-          try enforceChecks(listParquetFiles(rewriteDir) ++
-            insertDir.map(listParquetFiles).getOrElse(Seq.empty),
+          try enforceChecks((rewriteInfos ++ insertInfos).map(i => s"$location/${i._1}"),
             schemaAtWrite, "MERGE")
           catch { case e: Throwable =>
             // refused data never commits; reclaim the staged dirs
@@ -2680,7 +2720,6 @@ final class GraftTable private (
     // hold new values and must hold the CHECK constraints
     if (what != "DELETE") enforceChecks(staged, schemaAtWrite, what)
     val infos = footerInfosRel(staged)
-      .filter(_._2._1 > 0L) // a fully-deleted group leaves no file behind
     if (replaced.isEmpty && infos.isEmpty) {
       // the operation touched no group and wrote no rows — leave no trace
       val (fs, _) = GraftTable.fsAndPath(location)
@@ -2769,14 +2808,13 @@ final class GraftTable private (
       insertFiles: Seq[String], reinsertFiles: Seq[String],
       deletedRows: Long): Unit = withTableLock {
     refreshMeta()
-    def infos(files: Seq[String]) = footerInfosRel(files)
-      .filter(_._2._1 > 0L)
-    val insertInfos = infos(insertFiles)
-    val reinsertInfos = infos(reinsertFiles)
+    val insertInfos = footerInfosRel(insertFiles)
+    val reinsertInfos = footerInfosRel(reinsertFiles)
     if (newDvs.isEmpty && insertInfos.isEmpty && reinsertInfos.isEmpty) return
     // both genuinely-new rows and re-stated row versions carry values
     // the CHECK constraints must hold on
-    enforceChecks(insertFiles ++ reinsertFiles, schemaAtWrite, what)
+    enforceChecks((insertInfos ++ reinsertInfos).map(i => s"$location/${i._1}"),
+      schemaAtWrite, what)
     val insertRows = insertInfos.map(_._2._1).sum
     val rowDelta = insertRows + reinsertInfos.map(_._2._1).sum - deletedRows
     val touched = newDvs.map(_._1)
@@ -2923,21 +2961,30 @@ final class GraftTable private (
     val fileInputs = m.files.map { rel =>
       (rel,
         m.fileStats.get(rel).flatMap(_.values.headOption).map(_.rows),
+        m.fileLens.get(rel),
         m.dvs.contains(rel))
     }
     val fileAgg: (Seq[String], Long, Boolean, Seq[(String, Long)]) =
       if (fileInputs.isEmpty) (Seq.empty, 0L, true, Seq.empty)
       else spark.sparkContext
         .parallelize(fileInputs, math.min(fileInputs.size, 64))
-        .map { case (rel, recorded, isVectored) =>
+        .map { case (rel, recorded, recordedLen, isVectored) =>
           val abs = s"$loc/$rel"
           val out = Seq.newBuilder[String]
           var rows = -1L
           try {
             val p = new HPath(abs)
             val fs = p.getFileSystem(conf.value)
-            if (!fs.exists(p)) out += s"$rel: missing data file"
+            val st =
+              try Some(fs.getFileStatus(p))
+              catch { case _: java.io.FileNotFoundException => None }
+            if (st.isEmpty) out += s"$rel: missing data file"
             else {
+              // the scan plans splits from the recorded length, so a
+              // file changed behind the table's back must surface here
+              recordedLen.filter(_ != st.get.getLen).foreach { n =>
+                out += s"$rel: file holds ${st.get.getLen} bytes, metadata recorded $n"
+              }
               val in = org.apache.parquet.hadoop.util.HadoopInputFile
                 .fromPath(p, conf.value)
               val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
@@ -3415,10 +3462,10 @@ final class GraftTable private (
   /** The same EXPLAIN surface as typed entries, merged into the DSv2
     * scan's metadata so `EXPLAIN` on a graft table prints them — the
     * reference prints file + size under EXPLAIN
-    * (`cstore_fdw.c:1944-1965`). `tableSize()` stats every data file,
-    * so callers on the planning path must invoke this only when the
-    * EXPLAIN text is actually rendered (the scan defers it to
-    * `getMetaData()`), never eagerly per query. */
+    * (`cstore_fdw.c:1944-1965`). Spark renders the plan description,
+    * and so calls this, on every query execution; `tableSize()` reads
+    * the data bytes from the manifest, so the cost does not grow with
+    * the file count. */
   def explainMeta: Map[String, String] = Map(
     "GraftLocation" -> location,
     "GraftFiles" -> meta.files.size.toString,
@@ -3454,8 +3501,20 @@ final class GraftTable private (
 
   private def dataFiles(): Seq[String] = meta.files.map(f => s"$location/$f")
 
-  /** Absolute paths of the committed data files (for the DSv2 scan). */
+  /** Absolute paths of the committed data files. */
   def committedFiles: Seq[String] = dataFiles()
+
+  /** `(absolute path, byte length)` of every committed data file — the
+    * DSv2 scan's file index input, from the manifest alone. */
+  def committedFileLens: Seq[(String, Long)] = fileLensOf(meta.files)
+
+  /** Lengths stat'ed for files the manifest records none for (committed
+    * before lengths were recorded). Data files are immutable, so each
+    * costs one status call per handle. */
+  private val statedLens = new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
+
+  private def fileLensOf(rels: Seq[String]): Seq[(String, Long)] =
+    GraftTable.lensOf(location, rels, meta.fileLens, statedLens)
 
   /** Deletion-vector map for the scan delegates: normalized data-file
     * URI path → sidecar absolute path. Empty when the table carries no
@@ -3571,10 +3630,15 @@ final class GraftTable private (
       val next =
         // emitFiles/changeCommit describe ONE commit's emission — clear
         // the inherited values before the mutation (which may set its own)
-        try GraftTable.prepareManifest(location,
-          mutate(meta.copy(emitFiles = Vector.empty, changeCommit = false))
-            .copy(version = meta.version + 1))
-        catch { case _: GraftTable.CommitSuperseded => return false }
+        try {
+          val m = mutate(meta.copy(emitFiles = Vector.empty, changeCommit = false))
+          // lengths of the files this commit references: carried from
+          // the base, or harvested from the new files' footers
+          val lens = m.files.iterator.flatMap(f =>
+            m.fileLens.get(f).orElse(footerLens.get(f)).map(f -> _)).toMap
+          GraftTable.prepareManifest(location,
+            m.copy(version = meta.version + 1, fileLens = lens))
+        } catch { case _: GraftTable.CommitSuperseded => return false }
       if (GraftTable.tryClaimVersion(location, next)) {
         // the claim IS the commit; the pointer is a best-effort read
         // cache — two unserialized writers may race its rename, and a
@@ -3583,6 +3647,7 @@ final class GraftTable private (
         try GraftTable.writeMetaAtomic(location, next)
         catch { case _: Exception => () }
         meta = next
+        footerLens = Map.empty
         done = true
       } else {
         attempts += 1
@@ -3707,7 +3772,15 @@ object GraftTable {
       // not ∝ table files; see [[GraftTable.prepareManifest]] for the
       // full contract (in-memory `files`/`fileStats` always stay fully
       // hydrated).
-      manifest: Vector[String] = Vector.empty)
+      manifest: Vector[String] = Vector.empty,
+      // Byte length of each committed data file, recorded from the
+      // footer read that harvests its row count and zone map — with
+      // `files`, the scan's whole planning input (no listing, no
+      // per-file status call). Serialized beside the file list (inline
+      // `file_lens`, or each manifest segment's added files). A file
+      // committed before lengths were recorded is absent; readers stat
+      // it once ([[GraftTable.lensOf]]).
+      fileLens: Map[String, Long] = Map.empty)
 
   /** One file's deletion-vector reference: sidecar rel path + how many
     * positions it holds (so effective per-file row counts never need a
@@ -4801,7 +4874,8 @@ object GraftTable {
       defaults: Map[String, Any],
       rowCount: Long,
       changeCommit: Boolean,
-      emitFiles: Vector[String])
+      emitFiles: Vector[String],
+      inlineLens: Map[String, Long] = Map.empty)
 
   private def rawSnapshotFromFields(m: Map[String, Any]): RawSnapshot =
     RawSnapshot(
@@ -4818,7 +4892,8 @@ object GraftTable {
       changeCommit = m.getOrElse("change_commit", java.lang.Boolean.FALSE)
         .asInstanceOf[Boolean],
       emitFiles = m.getOrElse("emit_files", List.empty[Any])
-        .asInstanceOf[List[Any]].map(_.asInstanceOf[String]).toVector)
+        .asInstanceOf[List[Any]].map(_.asInstanceOf[String]).toVector,
+      inlineLens = parseFileLens(m))
 
   def readHistoryRaw(location: String, version: Long): RawSnapshot =
     rawSnapshotFromFields(readHistoryObj(location, version))
@@ -4880,6 +4955,18 @@ object GraftTable {
       (pf.filterNot(cset), cf.filterNot(pset))
     }
 
+  /** Byte lengths recorded for the files the commits in `(p, c]`
+    * added (and possibly others): `c`'s inline lengths, else the
+    * segments the range appended — the same reads [[commitFileDelta]]
+    * makes, served from the segment cache. */
+  def addedFileLens(location: String, p: RawSnapshot,
+      c: RawSnapshot): Map[String, Long] =
+    if (c.manifest.isEmpty) c.inlineLens
+    else if (c.manifest.startsWith(p.manifest))
+      c.manifest.drop(p.manifest.size)
+        .foldLeft(Map.empty[String, Long])((m, rel) => m ++ readSegment(location, rel).lens)
+    else readHistoryMeta(location, c.version).fileLens
+
   /** Version of the committed HEAD, read WITHOUT hydrating any file
     * list: parse the pointer JSON, then walk claims forward with raw
     * parses only (same claim-detection rule as [[walkToHead]] — an
@@ -4894,6 +4981,22 @@ object GraftTable {
     MetaIo.headProbed(location)
     walkClaims(location,
       rawSnapshotFromFields(readHeadObj(location)).version)(_ => ())
+  }
+
+  /** `(absolute path, byte length)` of data files `rels` under
+    * `location`: the `recorded` (manifest) length, else one status call,
+    * kept in `memo`. */
+  def lensOf(location: String, rels: Seq[String],
+      recorded: Map[String, Long],
+      memo: java.util.concurrent.ConcurrentHashMap[String, java.lang.Long] =
+        new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]())
+      : Seq[(String, Long)] = {
+    lazy val fs = fsAndPath(location)._1
+    rels.map { rel =>
+      val abs = s"$location/$rel"
+      abs -> recorded.getOrElse(rel, memo.computeIfAbsent(rel,
+        _ => java.lang.Long.valueOf(fs.getFileStatus(new HPath(abs)).getLen)).longValue())
+    }
   }
 
   /** [[relativize]] for callers outside the storage package (the
@@ -4975,6 +5078,17 @@ object GraftTable {
       }
     }
 
+  /** Per-file byte lengths as a JSON object (inline meta field and
+    * manifest segments alike). */
+  private def renderFileLens(m: Map[String, Long]): String =
+    m.map { case (f, n) => s"${jsonStr(f)}: $n" }.mkString("{", ",", "}")
+
+  /** The `file_lens` field of a parsed meta or segment object; absent
+    * (written before lengths were recorded) reads as empty. */
+  private def parseFileLens(m: Map[String, Any]): Map[String, Long] =
+    m.getOrElse("file_lens", Map.empty[String, Any]).asInstanceOf[Map[String, Any]]
+      .map { case (f, n) => f -> n.asInstanceOf[Number].longValue() }
+
   // ---- manifest segments ---------------------------------------------
   //
   // The per-file metadata — the file LIST plus the zone-map bulk (per
@@ -5027,7 +5141,8 @@ object GraftTable {
   private[storage] final case class ManifestSegment(
       added: Vector[String],
       removed: Set[String],
-      stats: Map[String, Map[String, ColFileStats]])
+      stats: Map[String, Map[String, ColFileStats]],
+      lens: Map[String, Long])
 
   /** Immutable-content cache of parsed segments (access-order LRU —
     * segments never change once written, so cached content is valid
@@ -5049,7 +5164,7 @@ object GraftTable {
     }
     def put(key: String, seg: ManifestSegment): Unit = map.synchronized {
       if (!map.containsKey(key)) {
-        val w = 1L + seg.added.size + seg.removed.size +
+        val w = 1L + seg.added.size + seg.removed.size + seg.lens.size +
           seg.stats.valuesIterator.map(_.size.toLong).sum
         map.put(key, (seg, w))
         weight += w
@@ -5105,25 +5220,28 @@ object GraftTable {
         .asInstanceOf[List[Any]].map(_.asInstanceOf[String]).toVector,
       removed = m.getOrElse("files_removed", List.empty[Any])
         .asInstanceOf[List[Any]].map(_.asInstanceOf[String]).toSet,
-      stats = parseFileStats(m.getOrElse("file_stats", Map.empty[String, Any])))
+      stats = parseFileStats(m.getOrElse("file_stats", Map.empty[String, Any])),
+      lens = parseFileLens(m))
   }
 
   /** Replay a segment list: the file list in commit order, and the
-    * stats union (later segment wins — restriction to live files is
-    * the caller's step, since prepare also needs the dead mass). */
+    * stats and length unions (later segment wins — restriction to live
+    * files is the caller's step, since prepare also needs the dead
+    * mass). */
   private def replaySegments(location: String, segments: Seq[String])
-      : (Vector[String], Map[String, Map[String, ColFileStats]]) =
-    segments.foldLeft(
-      (Vector.empty[String], Map.empty[String, Map[String, ColFileStats]])) {
-      case ((files, stats), rel) =>
+      : (Vector[String], Map[String, Map[String, ColFileStats]], Map[String, Long]) =
+    segments.foldLeft((Vector.empty[String],
+      Map.empty[String, Map[String, ColFileStats]], Map.empty[String, Long])) {
+      case ((files, stats, lens), rel) =>
         val s = readSegment(location, rel)
         val kept = if (s.removed.isEmpty) files else files.filterNot(s.removed)
-        (kept ++ s.added, stats ++ s.stats)
+        (kept ++ s.added, stats ++ s.stats, lens ++ s.lens)
     }
 
   private[storage] def writeSegmentFile(location: String, version: Long,
       added: Vector[String], removed: Set[String],
-      stats: Map[String, Map[String, ColFileStats]]): String = {
+      stats: Map[String, Map[String, ColFileStats]],
+      lens: Map[String, Long] = Map.empty): String = {
     val rel = f"_graft_manifest/m$version%020d-${
       java.util.UUID.randomUUID().toString.take(8)}.json"
     val content =
@@ -5131,7 +5249,8 @@ object GraftTable {
          |  ${jsonStr(MagicKey)}: ${jsonStr(Magic)},
          |  "files_added": ${added.map(jsonStr).mkString("[", ",", "]")},
          |  "files_removed": ${removed.toSeq.sorted.map(jsonStr).mkString("[", ",", "]")},
-         |  "file_stats": ${renderFileStats(stats)}
+         |  "file_stats": ${renderFileStats(stats)},
+         |  "file_lens": ${renderFileLens(lens)}
          |}""".stripMargin
     writeFileAtomic(location, new HPath(location, rel), content)
     rel
@@ -5158,11 +5277,11 @@ object GraftTable {
       val base =
         try Some(replaySegments(location, next.manifest))
         catch { case _: Exception => None }
-      def full = next.copy(manifest = Vector(
-        writeSegmentFile(location, next.version, next.files, Set.empty, live)))
+      def full = next.copy(manifest = Vector(writeSegmentFile(
+        location, next.version, next.files, Set.empty, live, next.fileLens)))
       base match {
         case None => full
-        case Some((segFiles, coveredStats)) =>
+        case Some((segFiles, coveredStats, coveredLens)) =>
           val nextSet = next.files.toSet
           val segSet = segFiles.toSet
           val removed = segFiles.iterator.filterNot(nextSet).toSet
@@ -5191,9 +5310,11 @@ object GraftTable {
               dead * 2 > live.size) full
           else {
             val statsDelta = live.filter { case (f, _) => !coveredStats.contains(f) }
-            if (added.isEmpty && removed.isEmpty && statsDelta.isEmpty) next
-            else next.copy(manifest = next.manifest :+
-              writeSegmentFile(location, next.version, added, removed, statsDelta))
+            val lensDelta = next.fileLens.filter { case (f, _) => !coveredLens.contains(f) }
+            if (added.isEmpty && removed.isEmpty && statsDelta.isEmpty &&
+                lensDelta.isEmpty) next
+            else next.copy(manifest = next.manifest :+ writeSegmentFile(
+              location, next.version, added, removed, statsDelta, lensDelta))
           }
       }
     }
@@ -5225,6 +5346,7 @@ object GraftTable {
       if (m.manifest.nonEmpty) "{}" else renderFileStats(m.fileStats)
     val filesJson =
       if (m.manifest.nonEmpty) "[]" else m.files.map(js).mkString("[", ",", "]")
+    val fileLens = if (m.manifest.nonEmpty) "{}" else renderFileLens(m.fileLens)
     val streamTxn = m.streamTxn.map { case (q, b) => s"${js(q)}: $b" }
       .mkString("{", ",", "}")
     val dvs = m.dvs.map { case (f, e) =>
@@ -5252,6 +5374,7 @@ object GraftTable {
        |  "defaults": $defaults,
        |  "manifest": ${m.manifest.map(js).mkString("[", ",", "]")},
        |  "file_stats": $fileStats,
+       |  "file_lens": $fileLens,
        |  "stream_txn": $streamTxn,
        |  "emit_files": ${m.emitFiles.map(js).mkString("[", ",", "]")},
        |  "dropped_cols": ${m.droppedCols.map(js).mkString("[", ",", "]")},
@@ -5394,15 +5517,16 @@ object GraftTable {
       .asInstanceOf[List[Any]].map(_.asInstanceOf[String]).toVector
     val inlineStats = parseFileStats(
       m.getOrElse("file_stats", Map.empty[String, Any]))
-    val (files, fileStats) =
-      if (manifest.isEmpty) (inlineFiles, inlineStats)
+    val (files, fileStats, fileLens) =
+      if (manifest.isEmpty) (inlineFiles, inlineStats, parseFileLens(m))
       else {
         // replay the segments for the list; later segment wins for
-        // stats; dead entries (rewritten-away files) are dropped by
-        // the live-file restriction
-        val (segFiles, segStats) = replaySegments(location, manifest)
+        // stats and lengths; dead entries (rewritten-away files) are
+        // dropped by the live-file restriction
+        val (segFiles, segStats, segLens) = replaySegments(location, manifest)
         val fileSet = segFiles.toSet
-        (segFiles, segStats.filter { case (f, _) => fileSet(f) })
+        (segFiles, segStats.filter { case (f, _) => fileSet(f) },
+          segLens.filter { case (f, _) => fileSet(f) })
       }
     Meta(
       currentSchema = schema,
@@ -5435,6 +5559,7 @@ object GraftTable {
         .asInstanceOf[Number].longValue(),
       fileStats = fileStats,
       manifest = manifest,
+      fileLens = fileLens,
       streamTxn = m.getOrElse("stream_txn", Map.empty[String, Any])
         .asInstanceOf[Map[String, Any]]
         .map { case (q, b) => q -> b.asInstanceOf[Number].longValue() },

@@ -75,10 +75,10 @@ object GraftDeltaRowLevel {
       // sound here (only matched rows are touched — no carried rows to
       // lose), and pruneColumns peels the lineage rowId off for the
       // wrapped factory
-      ParquetDelegate.scanBuilder(s"graft-delta.`$location`", t.committedFiles,
+      ParquetDelegate.scanBuilder(GraftFileIndex.of(t),
         t.readSchema(), options,
         exactRowCount = Some(t.rowCountFromMetadata()),
-        filePruner = Some(t.prunedFiles),
+        filePruner = Some(t.prunedFileLens),
         hasSynthesizedColumns = t.hasSynthesizedColumns,
         bucketSpec = t.options.bucketBy.headOption.map(c => (c, t.options.bucketCount)),
         dvs = t.dvAbsByPath)

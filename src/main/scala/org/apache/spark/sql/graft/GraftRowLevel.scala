@@ -13,7 +13,7 @@ import org.apache.spark.sql.connector.write.{BatchWrite, DataWriter, DataWriterF
 import org.apache.spark.sql.connector.write.RowLevelOperation.Command
 import org.apache.spark.sql.execution.datasources.{FilePartition, OutputWriterFactory}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
-import org.apache.spark.sql.execution.datasources.v2.parquet.{ParquetScan, ParquetScanBuilder, ParquetTable}
+import org.apache.spark.sql.execution.datasources.v2.parquet.{ParquetScan, ParquetScanBuilder}
 import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types.{StructType, TimestampType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -62,30 +62,25 @@ object GraftRowLevel {
     * (group) filters through the zone maps; they are never forwarded to
     * the parquet reader, because a row-group skipped by the condition
     * would silently drop CARRIED rows from the rewrite. */
-  def cowScanBuilder(name: String, files: Seq[String], schema: StructType,
+  def cowScanBuilder(index: GraftFileIndex, schema: StructType,
       options: CaseInsensitiveStringMap,
-      filePruner: Seq[Filter] => Seq[String],
+      filePruner: Seq[Filter] => Seq[(String, Long)],
       runtimeFilterCols: Seq[String],
       onPlanned: Seq[String] => Unit,
-      dvByPath: Map[String, String] = Map.empty): ScanBuilder = {
-    val spark = SparkSession.active
-    val table = ParquetTable(name, spark, options, files, Some(schema),
-      classOf[ParquetFileFormat])
-    new CowScanBuilder(spark, table, schema, options, files, filePruner,
+      dvByPath: Map[String, String] = Map.empty): ScanBuilder =
+    new CowScanBuilder(SparkSession.active, index, schema, options, filePruner,
       runtimeFilterCols, onPlanned, dvByPath)
-  }
 
   private final class CowScanBuilder(
       spark: SparkSession,
-      table: ParquetTable,
+      index: GraftFileIndex,
       schema: StructType,
       options: CaseInsensitiveStringMap,
-      allFiles: Seq[String],
-      filePruner: Seq[Filter] => Seq[String],
+      filePruner: Seq[Filter] => Seq[(String, Long)],
       runtimeFilterCols: Seq[String],
       onPlanned: Seq[String] => Unit,
       dvByPath: Map[String, String])
-      extends ParquetScanBuilder(spark, table.fileIndex, schema, schema, options) {
+      extends ParquetScanBuilder(spark, index, schema, schema, options) {
 
     private var groupFilters: Array[Filter] = Array.empty
 
@@ -103,18 +98,16 @@ object GraftRowLevel {
         : Boolean = false
 
     override def build(): ParquetScan = {
-      val kept =
-        if (groupFilters.nonEmpty) filePruner(groupFilters.toIndexedSeq)
-        else allFiles
-      val base =
-        if (kept.size < allFiles.size) {
-          val prunedTable = ParquetTable(table.name, spark, options, kept,
-            Some(schema), classOf[ParquetFileFormat])
-          new ParquetScanBuilder(spark, prunedTable.fileIndex, schema, schema,
-            options).build()
-        } else super.build()
-      new CowParquetScan(base, filePruner, runtimeFilterCols, onPlanned, dvByPath,
-        (allFiles.size - kept.size).toLong)
+      // the group filters prune on the manifest; nothing was pushed to
+      // parquet, so the scan differs from super.build()'s only in index
+      val scanIndex =
+        if (groupFilters.isEmpty) index
+        else {
+          val kept = filePruner(groupFilters.toIndexedSeq)
+          if (kept.size < index.fileCount) index.withFiles(kept) else index
+        }
+      new CowParquetScan(super.build(), scanIndex, filePruner, runtimeFilterCols,
+        onPlanned, dvByPath, (index.fileCount - scanIndex.fileCount).toLong)
     }
   }
 
@@ -126,12 +119,13 @@ object GraftRowLevel {
     * so the write's commit swaps exactly the scanned set. */
   private final class CowParquetScan(
       base: ParquetScan,
-      filePruner: Seq[Filter] => Seq[String],
+      index: GraftFileIndex,
+      filePruner: Seq[Filter] => Seq[(String, Long)],
       runtimeFilterCols: Seq[String],
       onPlanned: Seq[String] => Unit,
       dvByPath: Map[String, String],
       staticPrunedFiles: Long)
-      extends ParquetScan(base.sparkSession, base.hadoopConf, base.fileIndex,
+      extends ParquetScan(base.sparkSession, base.hadoopConf, index,
         base.dataSchema,
         // a group carrying a deletion vector must be read NET of it —
         // carrying its dead rows into the rewrite would resurrect them;
@@ -188,7 +182,7 @@ object GraftRowLevel {
         val v1 = org.apache.spark.sql.internal.connector.PredicateUtils.toV1(predicates)
         if (v1.nonEmpty)
           runtimeKept = Some(filePruner(v1.toIndexedSeq)
-            .map(p => new Path(p).toUri.getPath).toSet)
+            .map(p => new Path(p._1).toUri.getPath).toSet)
       }
     }
 
@@ -495,8 +489,8 @@ object GraftRowLevel {
           case declared => declared
         }
       dvsAtRead = t.dvEntries
-      cowScanBuilder(s"graft-cow.`$location`", t.committedFiles, schemaAtRead,
-        options, t.prunedFiles, rfCols, fs => planned = fs,
+      cowScanBuilder(GraftFileIndex.of(t), schemaAtRead,
+        options, t.prunedFileLens, rfCols, fs => planned = fs,
         dvByPath = t.dvAbsByPath)
     }
 

@@ -4,9 +4,7 @@ import java.util.OptionalLong
 
 import org.apache.spark.sql.classic.SparkSession
 import org.apache.spark.sql.connector.read.{ScanBuilder, Statistics}
-import org.apache.spark.sql.execution.datasources.PartitioningAwareFileIndex
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
-import org.apache.spark.sql.execution.datasources.v2.parquet.{ParquetScan, ParquetScanBuilder, ParquetTable}
+import org.apache.spark.sql.execution.datasources.v2.parquet.{ParquetScan, ParquetScanBuilder}
 import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -14,11 +12,12 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import graft.storage.{GraftTable, Selectivity}
 
 /** Scan delegation for the graft DSv2 connector: build Spark's own
-  * ParquetTable over the graft table's committed file list, so the graft
-  * source inherits the full vectorized read stack — column pruning,
-  * filter pushdown, row-group skipping, partition parallelism — instead
-  * of reimplementing a PartitionReader. Lives in the sql subpackage
-  * because the file-source v2 internals are `private[sql]`.
+  * parquet scan over the graft table's committed files (a
+  * [[GraftFileIndex]] read from the manifest — no listing), so the
+  * graft source inherits the full vectorized read stack — column
+  * pruning, filter pushdown, row-group skipping, partition parallelism —
+  * instead of reimplementing a PartitionReader. Lives in the sql
+  * subpackage because the file-source v2 internals are `private[sql]`.
   *
   * Graft-metadata hooks riding on top of the delegate:
   *
@@ -38,43 +37,31 @@ import graft.storage.{GraftTable, Selectivity}
   */
 object ParquetDelegate {
 
-  def scanBuilder(name: String, files: Seq[String], schema: StructType,
+  def scanBuilder(index: GraftFileIndex, schema: StructType,
       options: CaseInsensitiveStringMap,
       exactRowCount: Option[Long] = None,
-      filePruner: Option[Seq[Filter] => Seq[String]] = None,
+      filePruner: Option[Seq[Filter] => Seq[(String, Long)]] = None,
       tableStats: Option[GraftTable.TableStats] = None,
       explainMeta: () => Map[String, String] = () => Map.empty,
       streamLocation: Option[String] = None,
       hasSynthesizedColumns: Boolean = false,
       bucketSpec: Option[(String, Int)] = None,
       fileRanges: Option[GraftTable.SortedFileRanges] = None,
-      dvs: Map[String, String] = Map.empty): ScanBuilder = {
-    val spark = SparkSession.active
-    val table = ParquetTable(name, spark, options, files, Some(schema),
-      classOf[ParquetFileFormat])
-    (exactRowCount, filePruner, tableStats, streamLocation) match {
-      case (None, None, None, None)
-          if !hasSynthesizedColumns && bucketSpec.isEmpty && dvs.isEmpty =>
-        table.newScanBuilder(options)
-      case _ =>
-        new GraftScanBuilder(name, spark, table.fileIndex, schema, options,
-          files, exactRowCount, filePruner, tableStats, explainMeta,
-          streamLocation, hasSynthesizedColumns, bucketSpec, fileRanges, dvs)
-    }
-  }
+      dvs: Map[String, String] = Map.empty): ScanBuilder =
+    new GraftScanBuilder(SparkSession.active, index, schema, options,
+      exactRowCount, filePruner, tableStats, explainMeta,
+      streamLocation, hasSynthesizedColumns, bucketSpec, fileRanges, dvs)
 
   /** ParquetScanBuilder that (a) prunes the file list through the graft
     * zone maps once filters are pushed, and (b) attaches graft statistics
     * + EXPLAIN metadata to the built scan. */
   private final class GraftScanBuilder(
-      name: String,
       spark: SparkSession,
-      fileIndex: PartitioningAwareFileIndex,
+      index: GraftFileIndex,
       schema: StructType,
       options: CaseInsensitiveStringMap,
-      allFiles: Seq[String],
       exactRows: Option[Long],
-      filePruner: Option[Seq[Filter] => Seq[String]],
+      filePruner: Option[Seq[Filter] => Seq[(String, Long)]],
       tableStats: Option[GraftTable.TableStats],
       explainMeta: () => Map[String, String],
       streamLocation: Option[String],
@@ -82,7 +69,7 @@ object ParquetDelegate {
       bucketSpec: Option[(String, Int)] = None,
       fileRanges: Option[GraftTable.SortedFileRanges] = None,
       dvs: Map[String, String] = Map.empty)
-      extends ParquetScanBuilder(spark, fileIndex, schema, schema, options) {
+      extends ParquetScanBuilder(spark, index, schema, schema, options) {
 
     /** Parquet footer aggregates (MIN/MAX/COUNT answered from file
       * statistics) are only sound when every file physically contains
@@ -180,26 +167,17 @@ object ParquetDelegate {
     }
 
     override def build(): ParquetScan = {
-      var staticPruned = 0L
+      // zone-map pruning on the manifest picks the index the scan plans
+      // over; the pushdown state built above does not depend on it
       val prunerFilters = translatedDataFilters.toSeq ++ collatedPrunerFilters
-      val prunedBase = filePruner match {
+      val scanIndex = filePruner match {
         case Some(pruner) if prunerFilters.nonEmpty =>
           val kept = pruner(prunerFilters)
-          if (kept.size < allFiles.size) {
-            staticPruned = (allFiles.size - kept.size).toLong
-            // rebuild the delegate over the surviving files, replaying
-            // the pushdown state through the public builder API
-            val prunedTable = ParquetTable(name, spark, options, kept,
-              Some(schema), classOf[ParquetFileFormat])
-            val inner = new ParquetScanBuilder(
-              spark, prunedTable.fileIndex, schema, schema, options)
-            inner.pushFilters(this.dataFilters ++ this.partitionFilters)
-            inner.pruneColumns(this.requiredSchema)
-            inner.build()
-          } else super.build()
-        case _ => super.build()
+          if (kept.size < index.fileCount) index.withFiles(kept) else index
+        case _ => index
       }
-      new StatsParquetScan(prunedBase, exactRows, tableStats,
+      val staticPruned = (index.fileCount - scanIndex.fileCount).toLong
+      new StatsParquetScan(super.build(), scanIndex, exactRows, tableStats,
         schema, translatedDataFilters.toSeq, explainMeta, filePruner,
         streamLocation, bucketSpec, fileRanges, dvs, lineageCols,
         staticPruned)
@@ -219,19 +197,20 @@ object ParquetDelegate {
     */
   private final class StatsParquetScan(
       base: ParquetScan,
+      index: GraftFileIndex,
       exactRows: Option[Long],
       tableStats: Option[GraftTable.TableStats],
       tableSchema: StructType,
       translatedFilters: Seq[Filter],
       explainMeta: () => Map[String, String],
-      filePruner: Option[Seq[Filter] => Seq[String]],
+      filePruner: Option[Seq[Filter] => Seq[(String, Long)]],
       streamLocation: Option[String] = None,
       bucketSpec: Option[(String, Int)] = None,
       fileRanges: Option[GraftTable.SortedFileRanges] = None,
       dvByPath: Map[String, String] = Map.empty,
       lineageCols: Seq[String] = Seq.empty,
       staticPrunedFiles: Long = 0L)
-      extends ParquetScan(base.sparkSession, base.hadoopConf, base.fileIndex,
+      extends ParquetScan(base.sparkSession, base.hadoopConf, index,
         base.dataSchema,
         // deletion vectors / row lineage: the parquet readers
         // additionally produce each row's file position (Spark's
@@ -434,7 +413,7 @@ object ParquetDelegate {
       filePruner match {
         case Some(pruner) if v1.nonEmpty =>
           runtimeKept = Some(pruner(v1.toSeq)
-            .map(p => new org.apache.hadoop.fs.Path(p).toUri.getPath).toSet)
+            .map(p => new org.apache.hadoop.fs.Path(p._1).toUri.getPath).toSet)
         case _ => ()
       }
     }
@@ -542,9 +521,10 @@ object ParquetDelegate {
         super.estimateStatistics()
       }
 
-    // Deferred: explainMeta stats every data file for GraftSizeBytes,
-    // which belongs in EXPLAIN rendering, not on the per-query planning
-    // path (estimateStatistics/build never touch it).
+    // Spark renders the plan description, and so calls getMetaData, on
+    // every query execution; explainMeta is served from the manifest
+    // (GraftSizeBytes sums the recorded file lengths), so that costs no
+    // per-file status call.
     private lazy val graftMeta = explainMeta()
 
     override def getMetaData(): Map[String, String] =
@@ -703,8 +683,8 @@ object ParquetDelegate {
       * append-log stream (that is the graft-cdf source's job). */
     @volatile private var initialDvs: Map[String, String] = Map.empty
 
-    private def addedFiles(start: Long, end: Long): Seq[String] = {
-      val out = Seq.newBuilder[String]
+    private def addedFiles(start: Long, end: Long): Seq[(String, Long)] = {
+      val out = Seq.newBuilder[(String, Long)]
       var walkFrom = start
       var prev: Option[GraftTable.RawSnapshot] = None
       initialDvs = Map.empty
@@ -716,7 +696,7 @@ object ParquetDelegate {
         // yields both the hydrated file list and the raw walk seed
         // (ADVICE r16: metaAt + rawAt here read the same JSON twice)
         val (base, rawFirst) = GraftTable.readHistoryBoth(location, first)
-        out ++= base.files.map(f => s"$location/$f")
+        out ++= GraftTable.lensOf(location, base.files, base.fileLens)
         // the initial load is the table's STATE at `first`, not an
         // append log — merge-on-read-deleted rows must not resurrect
         // for a fresh consumer, so the snapshot's vectors ride along
@@ -743,10 +723,8 @@ object ParquetDelegate {
               "upserts through the Scala merge API, whose commits keep " +
               "insert files separate and stream-visible")
         } else {
-          val added = prev match {
-            case Some(p) => GraftTable.commitFileDelta(location, p, cur)._2
-            case None => Vector.empty[String]
-          }
+          val p = prev.get
+          val added = GraftTable.commitFileDelta(location, p, cur)._2
           // a commit may declare its stream-visible subset (MERGE/CDC: the
           // copy-on-write rewrite files carry rows every stream already
           // delivered; only the insert files are new rows) — the
@@ -761,22 +739,21 @@ object ParquetDelegate {
             if (cur.emitFiles.nonEmpty) added.filter(cur.emitFiles.toSet)
             else if (cur.rowCount > prevRows) added
             else Seq.empty
-          out ++= emit.map(f => s"$location/$f")
+          if (emit.nonEmpty)
+            out ++= GraftTable.lensOf(location, emit,
+              GraftTable.addedFileLens(location, p, cur))
         }
         prev = Some(cur)
       }
       out.result()
     }
 
-    private def scanOver(files: Seq[String]): ParquetScan =
-      scanOver(files, readSchema)
-
-    private def scanOver(files: Seq[String], schema: StructType): ParquetScan = {
-      val t = ParquetTable(s"graft-stream.`$location`", spark, options, files,
-        Some(schema), classOf[ParquetFileFormat])
-      new ParquetScanBuilder(spark, t.fileIndex, schema, schema, options)
-        .build()
-    }
+    /** Scan over a batch's files, indexed at the batch's end version. */
+    private def scanOver(files: Seq[(String, Long)], version: Long,
+        schema: StructType): ParquetScan =
+      new ParquetScanBuilder(spark,
+        new GraftFileIndex(spark, location, version, files), schema, schema,
+        options).build()
 
     /** Schema-evolution contract for a RUNNING stream: the schema is
       * captured at stream start, and every micro-batch is served in
@@ -814,9 +791,9 @@ object ParquetDelegate {
       if (delta.isEmpty) Array.empty
       else {
         requireCompatible(endV)
-        if (initialDvs.isEmpty) scanOver(delta).toBatch.planInputPartitions()
-        else scanOver(delta, DvScan.withRowIndex(readSchema))
-          .toBatch.planInputPartitions()
+        val schema =
+          if (initialDvs.isEmpty) readSchema else DvScan.withRowIndex(readSchema)
+        scanOver(delta, endV, schema).toBatch.planInputPartitions()
       }
     }
 
@@ -828,9 +805,9 @@ object ParquetDelegate {
       // through the wrapped row-index factory so dead rows never reach
       // a fresh consumer; every other batch keeps the columnar path.
       val dvs = initialDvs
-      if (dvs.isEmpty) scanOver(Seq.empty).toBatch.createReaderFactory()
+      if (dvs.isEmpty) scanOver(Seq.empty, 0L, readSchema).toBatch.createReaderFactory()
       else {
-        val inner = scanOver(Seq.empty, DvScan.withRowIndex(readSchema))
+        val inner = scanOver(Seq.empty, 0L, DvScan.withRowIndex(readSchema))
           .toBatch.createReaderFactory()
         new DvScan.DvReaderFactory(inner, dvs,
           new org.apache.spark.util.SerializableConfiguration(

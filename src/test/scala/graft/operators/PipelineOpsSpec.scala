@@ -252,6 +252,11 @@ class PipelineOpsSpec extends SparkSpec {
     // root this call created).
     val created = (p3StoreDirs().toSet -- before).toSeq
     assert(created.nonEmpty, "the entry must create its store under the scratch root")
+    // the few-files bound holds only because AQE coalesces the
+    // rebalance's shuffle partitions; without AQE it would fail for a
+    // reason unrelated to the write shape
+    assert(spark.conf.get("spark.sql.adaptive.enabled").toBoolean,
+      "spark.sql.adaptive.enabled must be true: the file-count bound below relies on AQE")
     created.foreach { loc =>
       val st = graft.storage.GraftTable.open(spark, loc)
       assert(st.committedFiles.size <= 4,

@@ -80,6 +80,22 @@ class CdcApplySpec extends SparkSpec {
     GraftTable.drop(t.location)
   }
 
+  test("mergeInternal refuses a null-key delete row at entry") {
+    // applyCdc drops NULL-key delete rows before the merge (test above);
+    // the merge itself must refuse one, since its folded delete tally
+    // would count the null-key target rows the row groups with
+    import spark.implicits._
+    val t = mk("cdc-nulldel")
+    val e = intercept[IllegalArgumentException] {
+      t.mergeInternal(cdc((11, "ELEVEN", "U")).drop("op"), Seq("id"), None,
+        Some(cdc((null.asInstanceOf[Integer], null, "D")).drop("op")))
+    }
+    assert(e.getMessage.contains("non-null keys"), e.getMessage)
+    assert(t.read().count() === 100L, "nothing committed")
+    assert(t.read().filter($"id" === 11).head().getString(1) === "v11")
+    GraftTable.drop(t.location)
+  }
+
   test("streaming changelog materializes exactly-once across batches and restarts") {
     import spark.implicits._
     val t = mk("cdc-stream")

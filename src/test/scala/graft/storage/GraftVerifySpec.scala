@@ -55,6 +55,18 @@ class GraftVerifySpec extends SparkSpec {
     assert(issues.exists(_.contains("unreadable parquet footer")), issues.mkString("; "))
   }
 
+  test("a data file truncated behind the table's back differs from its recorded length") {
+    val t = mk("vfy-len")
+    val victim = local(t.committedFiles.head)
+    val bytes = Files.readAllBytes(victim)
+    Files.write(victim, java.util.Arrays.copyOf(bytes, bytes.length - 8),
+      StandardOpenOption.TRUNCATE_EXISTING)
+    val issues = t.verify(deep = true)
+    assert(issues.exists(_.contains(
+      s"file holds ${bytes.length - 8} bytes, metadata recorded ${bytes.length}")),
+      issues.mkString("; "))
+  }
+
   test("a tampered deletion-vector sidecar is reported") {
     val t = mk("vfy-dv")
     t.deleteMor(Seq(org.apache.spark.sql.sources.In("id", Array(5, 7, 9))))
